@@ -1,8 +1,8 @@
 """Partitioned cuckoo-filter URL-seen set (D3, cuckoo variant).
 
 The north rule names a "bloom/cuckoo-filter URL-seen set"; operators/
-seen.py provides the bloom arm, this module provides the cuckoo arm
-(Fan, Andersen, Kaminsky & Mitzenmacher 2014, "Cuckoo Filter:
+seen.py provides the bloom structure, this module provides the cuckoo
+structure (Fan, Andersen, Kaminsky & Mitzenmacher 2014, "Cuckoo Filter:
 Practically Better Than Bloom") under the SAME contract: the filter is
 a PREFILTER, never the verdict — probe-negative candidates are
 definitely new and skip the exact anti-join; probe-positive candidates
@@ -49,9 +49,15 @@ False-positive rate ≈ 2*bucket_size/2^16 (+ a stash term, only
 relevant when overloaded) ≈ 1.2e-4 at the default bucket_size=4 —
 comparable to the bloom arm at default geometry.
 
+Probing goes through seen.py's single dispatch: this module supplies
+only CUCKOO — its key columns, block decoder and membership kernel
+(`cuckoo_member`) — and seen.probe_broadcast / seen.probe_cogrouped run
+it, exactly as they run the bloom kernel. `cuckoo_prefilter` and
+`dedup_seen_with_cuckoo` are thin entry points onto them.
+
 No per-row Python on the J1 hot path: fp/i1/i2 are NATIVE columns
 (conv/pmod/xor on the md5 hex, like seen.bloom_position_cols) and the
-probe UDF body is vectorized numpy gathers over Arrow batches. The
+membership kernel is vectorized numpy gathers over Arrow batches. The
 only Python loop is inside `delete` — an offline maintenance batch
 (bounded by the eviction batch size), never part of a crawl round.
 """
@@ -63,6 +69,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from searchengine_spark.config import CrawlConfig
+from searchengine_spark.operators.seen import SeenFilter, exact_new, seen_prefilter
 
 FP_MOD = 65535  # fingerprints live in [1, 65535]; 0 marks an empty slot
 ALT_MULT = 0x5BD1E995  # MurmurHash2 mixing constant (public domain)
@@ -94,7 +101,9 @@ def cuckoo_key_py(md5_hex: str, cfg: CrawlConfig) -> tuple[int, int, int]:
 
 def cuckoo_key_cols(md5_col: Column, cfg: CrawlConfig) -> list[Column]:
     """[fp, i1, i2] as native JVM columns (no Python): the same hex
-    windows of the already-uniform md5 key the bloom arm uses."""
+    windows of the already-uniform md5 key the bloom arm uses.
+    Rejects a geometry the xor alternate bucket cannot address."""
+    _check_geometry(cfg)
     mask = cfg.cuckoo_buckets_per_shard - 1
     fp = (
         F.pmod(F.conv(F.substring(md5_col, 1, 4), 16, 10).cast("long"), F.lit(FP_MOD))
@@ -167,12 +176,12 @@ def _empty_block(cfg: CrawlConfig) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _decode(row, cfg: CrawlConfig) -> tuple[np.ndarray, np.ndarray]:
-    slots = (
-        np.frombuffer(row["slots"], dtype=np.uint16)
-        .reshape(cfg.cuckoo_buckets_per_shard, cfg.cuckoo_bucket_size)
-        .copy()
+    """Block row -> (slots2d, stash) views of its bytes, not copies.
+    A block whose size disagrees with the configured geometry raises."""
+    slots = np.frombuffer(row["slots"], dtype=np.uint16).reshape(
+        cfg.cuckoo_buckets_per_shard, cfg.cuckoo_bucket_size
     )
-    return slots, np.frombuffer(row["stash"], dtype=np.uint32).copy()
+    return slots, np.frombuffer(row["stash"], dtype=np.uint32)
 
 
 def _block_items(
@@ -193,7 +202,6 @@ def build_cuckoo_blocks(seen: DataFrame, cfg: CrawlConfig) -> DataFrame:
 
     fp/i1 arrive as native columns; the grouped-pandas body is
     vectorized numpy placement — no per-row Python."""
-    _check_geometry(cfg)
     mask = cfg.cuckoo_buckets_per_shard - 1
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -250,7 +258,7 @@ def merge_cuckoo_blocks(a: DataFrame, b: DataFrame, cfg: CrawlConfig) -> DataFra
     return a.unionByName(b).groupBy("shard").applyInPandas(merge, schema=BLOCK_SCHEMA)
 
 
-# -- probe / dedup -------------------------------------------------------------
+# -- probe / dedup: the shared drivers in operators/seen.py -------------------
 
 
 def _cuckoo_blocks_bytes(cfg: CrawlConfig) -> int:
@@ -259,59 +267,29 @@ def _cuckoo_blocks_bytes(cfg: CrawlConfig) -> int:
     return cfg.n_shards * per_shard
 
 
-def _cuckoo_prefilter_cogrouped(
-    candidates: DataFrame, blocks: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    """Shard-co-partitioned cuckoo probe — the at-scale arm (same
-    dispatch/rationale as seen._bloom_prefilter_cogrouped): candidates
-    cogroup with their shard's single block row; no driver collect, no
-    whole-map broadcast. Missing block => suspect."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
+def cuckoo_member(block: tuple[np.ndarray, np.ndarray], keys: np.ndarray) -> np.ndarray:
+    """Membership kernel: keys is int64[n, 3] (the cuckoo_key_cols
+    values fp, i1, i2); a key is a member iff its fp sits in bucket i1,
+    bucket i2 or (packed) in the sorted stash."""
+    slots2d, stash = block
+    fp, i1, i2 = keys.T
+    f16 = fp.astype(np.uint16)[:, None]
+    hit = (slots2d[i1] == f16).any(axis=1) | (slots2d[i2] == f16).any(axis=1)
+    if len(stash):
+        packed = _pack(i1, fp, len(slots2d) - 1)
+        pos = np.minimum(np.searchsorted(stash, packed), len(stash) - 1)
+        hit |= stash[pos] == packed
+    return hit
 
-    mask = cfg.cuckoo_buckets_per_shard - 1
-    bsize = cfg.cuckoo_bucket_size
-    fp_c, i1_c, i2_c = cuckoo_key_cols(F.col("url_md5"), cfg)
-    cand = (
-        candidates.withColumn("_cfp", fp_c)
-        .withColumn("_ci1", i1_c)
-        .withColumn("_ci2", i2_c)
-    )
-    out_schema = StructType(
-        list(candidates.schema.fields) + [StructField("maybe_seen", BooleanType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def probe(cdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(bdf) == 0:
-            cdf = cdf.copy()
-            cdf["maybe_seen"] = True  # no block: suspect (exact-join path)
-            return cdf[out_cols]
-        slots2d = np.frombuffer(bdf["slots"].iloc[0], dtype=np.uint16).reshape(
-            -1, bsize
-        )
-        stash = np.frombuffer(bdf["stash"].iloc[0], dtype=np.uint32)
-        fp = cdf["_cfp"].to_numpy(dtype=np.int64)
-        i1 = cdf["_ci1"].to_numpy(dtype=np.int64)
-        i2 = cdf["_ci2"].to_numpy(dtype=np.int64)
-        f16 = fp.astype(np.uint16)[:, None]
-        hit = (slots2d[i1] == f16).any(axis=1)
-        hit |= (slots2d[i2] == f16).any(axis=1)
-        if len(stash):
-            packed = _pack(i1, fp, mask)
-            pos = np.searchsorted(stash, packed)
-            pos = np.minimum(pos, len(stash) - 1)
-            hit |= stash[pos] == packed
-        cdf = cdf.copy()
-        cdf["maybe_seen"] = hit
-        return cdf[out_cols]
-
-    return (
-        cand.groupBy("shard")
-        .cogroup(blocks.groupBy("shard"))
-        .applyInPandas(probe, schema=out_schema)
-    )
+CUCKOO = SeenFilter(
+    key_cols=cuckoo_key_cols,
+    decode=_decode,
+    member=cuckoo_member,
+    blocks_bytes=_cuckoo_blocks_bytes,
+    build=build_cuckoo_blocks,
+    merge=merge_cuckoo_blocks,
+)
 
 
 def cuckoo_prefilter(
@@ -319,62 +297,11 @@ def cuckoo_prefilter(
 ) -> DataFrame:
     """Tag candidates with maybe_seen; cuckoo-negatives are exact-new.
 
-    Same missing-shard rule as the bloom arm: no block for a shard =>
-    suspect (True), so config drift can only cost a no-op exact probe,
-    never skip the exact check (dedup-exactness invariant).
-
-    Scale dispatch (r6): beyond seen._broadcast_max_bytes() of
-    configured block geometry the whole-map collect+broadcast is
-    replaced by the shard-cogrouped probe above (same rows, pinned by
-    tests/test_plans.py::test_seen_filter_cogroup_matches_broadcast)."""
-    from searchengine_spark.operators.seen import _broadcast_max_bytes
-
-    _check_geometry(cfg)
-    if _cuckoo_blocks_bytes(cfg) > _broadcast_max_bytes():
-        return _cuckoo_prefilter_cogrouped(candidates, blocks, cfg)
-    mask = cfg.cuckoo_buckets_per_shard - 1
-    bsize = cfg.cuckoo_bucket_size
-    block_map = {
-        int(r["shard"]): (
-            np.frombuffer(r["slots"], dtype=np.uint16).reshape(-1, bsize),
-            np.frombuffer(r["stash"], dtype=np.uint32),
-        )
-        for r in blocks.collect()
-    }
-    bc = spark.sparkContext.broadcast(block_map)
-
-    @F.pandas_udf("boolean")
-    def probe(
-        shards: pd.Series, fp_s: pd.Series, i1_s: pd.Series, i2_s: pd.Series
-    ) -> pd.Series:
-        blocks_local = bc.value
-        sh = shards.to_numpy(dtype=np.int64)
-        n = len(sh)
-        if n == 0:
-            return pd.Series(np.zeros(0, dtype=bool))
-        fp = fp_s.to_numpy(dtype=np.int64)
-        i1 = i1_s.to_numpy(dtype=np.int64)
-        i2 = i2_s.to_numpy(dtype=np.int64)
-        out = np.ones(n, dtype=bool)  # default: suspect (exact-join path)
-        packed = _pack(i1, fp, mask)
-        for s in np.unique(sh):
-            blk = blocks_local.get(int(s))
-            if blk is None:
-                continue
-            slots2d, stash = blk
-            m = sh == s
-            f16 = fp[m].astype(np.uint16)[:, None]
-            hit = (slots2d[i1[m]] == f16).any(axis=1)
-            hit |= (slots2d[i2[m]] == f16).any(axis=1)
-            if len(stash):
-                pos = np.searchsorted(stash, packed[m])
-                pos = np.minimum(pos, len(stash) - 1)
-                hit |= stash[pos] == packed[m]
-            out[m] = hit
-        return pd.Series(out)
-
-    fp, i1, i2 = cuckoo_key_cols(F.col("url_md5"), cfg)
-    return candidates.withColumn("maybe_seen", probe(F.col("shard"), fp, i1, i2))
+    Same missing-shard rule and geometry-chosen arm as every structure
+    (seen.seen_prefilter): no block for a shard => suspect (True), so
+    config drift can only cost a no-op exact probe, never skip the
+    exact check (dedup-exactness invariant)."""
+    return seen_prefilter(spark, candidates, blocks, cfg, CUCKOO)
 
 
 def dedup_seen_with_cuckoo(
@@ -388,11 +315,7 @@ def dedup_seen_with_cuckoo(
 
     result ≡ candidates ANTI JOIN seen — verified by tests; only the
     physical shape differs (cuckoo-negatives never shuffle)."""
-    tagged = cuckoo_prefilter(spark, candidates, blocks, cfg)
-    definitely_new = tagged.where(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = tagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    cleared = suspects.join(seen.select("url_md5"), "url_md5", "left_anti")
-    return definitely_new.unionByName(cleared)
+    return exact_new(cuckoo_prefilter(spark, candidates, blocks, cfg), seen)
 
 
 # -- deletion (the capability bloom lacks) -------------------------------------
@@ -412,10 +335,7 @@ def delete_from_cuckoo_blocks(
     Maintenance path (eviction batches), not the J1 hot path: the
     per-key clear loop is bounded by the delete batch size per shard;
     bucket re-compaction and stash rebuild stay vectorized."""
-    _check_geometry(cfg)
     mask = cfg.cuckoo_buckets_per_shard - 1
-    bsize = cfg.cuckoo_bucket_size
-
     fp, i1, _ = cuckoo_key_cols(F.col("url_md5"), cfg)
     key_lists = (
         keys.select("shard", fp.alias("fp"), i1.alias("i1"))
@@ -432,6 +352,7 @@ def delete_from_cuckoo_blocks(
         if row["del_fp"] is None or len(row["del_fp"]) == 0:
             return pdf[["shard", "slots", "stash"]]
         slots2d, stash = _decode(row, cfg)
+        slots2d = slots2d.copy()
         stash_list = stash.tolist()
         dfp = np.asarray(row["del_fp"], dtype=np.int64)
         di1 = np.asarray(row["del_i1"], dtype=np.int64)

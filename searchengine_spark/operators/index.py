@@ -486,45 +486,6 @@ def build_postings(
     )
 
 
-def shared_postings(postings: DataFrame, n_parts: int = 32) -> DataFrame:
-    """Pin ONE evaluation of an EPHEMERAL dict that several plan
-    branches consume (e.g. small-dict routing: main batch + small
-    batch + present-term probe all derive from the same build).
-
-    Mechanics: a term-keyed exchange every consumer hangs off — AQE
-    reuses canonically identical exchange subtrees within one action —
-    guarded by a fold-proof barrier: ``element_at(shuffle([true]), 1)``
-    is nondeterministic to the optimizer (shuffle()), so per-branch
-    filter pushdown and column pruning cannot specialize the subtree
-    below it and break the exchange identity. (A rand()-based barrier
-    does NOT survive: Spark 4 folds rand-vs-literal comparisons.) The
-    predicate is always true at runtime; rows pass through unchanged.
-
-    ONLY for one-shot ephemeral plans: a persisted dict wants the
-    opposite trade (pushdown into the parquet range scan).
-
-    Measured (round 5, idle box, order-controlled A/B at sf0.1,
-    local[32], warm steady state): search_smallterm ~8.2 s with the
-    shared exchange vs ~9.3 s with three independent builds — a ~12%
-    win. An earlier docstring claimed 10.2 -> 7.8 s; that figure was
-    never reproduced in any recorded bench and is retracted. The
-    first execution of this plan family costs ~2x extra either way
-    (python-worker spin-up + codegen), which is what one-shot bench
-    rows mostly measure.
-
-    r6 STATUS: the reuse only holds while the consumer branches stay
-    UN-re-aliased — any self-join/self-union between them makes the
-    analyzer deduplicate relations and the exchange subtrees lose
-    canonical identity (no reuse; measured: the routed search ran its
-    build once per frame). The search family was therefore moved to
-    single-lineage forms (_routed_top2, search_weighted_batch) that
-    need no sharing; this operator remains for simple fan-out shapes
-    (its test pins the mechanics it still guarantees) — see the
-    CLAUDE.md trap addenda."""
-    barrier = F.element_at(F.shuffle(F.array(F.lit(True))), 1)
-    return postings.repartition(n_parts, "term").where(barrier)
-
-
 def build_small_postings(postings: DataFrame, pos_col: str | None = None) -> DataFrame:
     """A6: truncate terms to SMALLWORDSIZE bytes, keep the max-rank
     instance per (doc, short term); deterministic tie-break by term.
@@ -938,7 +899,6 @@ def search_weighted_batch(
     host_col: str = "host",
     k: int = MAX_SHOW,
     max_search: int = MAX_SEARCH,
-    n_parts: int = 32,
 ) -> DataFrame:
     """Evaluate MANY queries against the dict in ONE action — the
     amortization a serve-one-query-at-a-time engine structurally cannot
@@ -952,13 +912,9 @@ def search_weighted_batch(
       ``_tagged_top2`` pass with a GLOBAL term index, so a term used by
       five queries is boundary-expanded and top-2-reduced once, not
       five times.
-    * PASS sharing: every per-query scoring branch hangs off one
-      doc-keyed exchange of the tagged-top2 frame, guarded by the same
-      fold-proof ``element_at(shuffle([true]),1)`` barrier as
-      :func:`shared_postings` (see CLAUDE.md trap: per-branch filter
-      pushdown below the exchange would break canonical-subtree reuse).
-      Every branch reads the same five columns — column pruning below
-      the exchange would likewise break reuse.
+    * PASS sharing: every query's score is a projection column of ONE
+      pivoted frame over all term indices — a single lineage, so the
+      dict pass runs once per batch with no exchange-reuse machinery.
 
     Per-query semantics are EXACTLY :func:`search_weighted` (main-dict
     boundary expansion, PosRanks top-2, min-posdiff coRank, top-K, host

@@ -358,67 +358,49 @@ def more_like_this(
     id_col: str = "doc_id",
     text_col: str = "text",
     weights: DataFrame | None = None,
-    n_parts: int = 32,
 ) -> DataFrame:
     """Related-document retrieval: top-k docs by tf-idf cosine to the
     given document ("more like this" — the reference's console has no
     analogue; PageSearcher serves term queries only).
 
     Scale shape: the query doc's weight vector is ONE doc's vocabulary
-    — broadcast it and equi-join on term, so the corpus-sized postings
-    table is scanned once and only rows sharing a term with the query
-    doc survive (sparse dot product; never a doc×doc self-join). Dot
-    products are exact BIGINT sums of w_e3 products; norms are exact
-    BIGINT sums of squares; the ONLY float step is the final
+    — broadcast it and left-join the weights on term, so the
+    corpus-sized weights table is scanned once and ONE groupBy(doc_id)
+    yields every doc's norm, its dot product with the query and its
+    shared-term count (sparse dot product; never a doc×doc self-join).
+    Docs sharing no term with the query doc are dropped — the inner-
+    join semantics, so a doc whose shared terms all weigh 0 stays with
+    dot 0. Dot products are exact BIGINT sums of w_e3 products; norms
+    are exact BIGINT sums of squares; the ONLY float step is the final
     round(dot / (sqrt(nq)·sqrt(nd)), 6) from identical integers.
     Zero-norm docs (every term corpus-universal) are excluded — a
     0/0 cosine is undefined, not similar.
 
-    Evaluation sharing: pass ``weights`` (a persisted
-    (doc_id, term, w_e3) table from :func:`tfidf_weights`) for the
-    production path — consumers read it with scan pushdown, the right
-    trade for persisted state. Without it the ephemeral tf-idf
-    derivation is pinned behind a doc_id-keyed exchange with the
-    fold-proof ``element_at(shuffle([true]),1)`` barrier
-    (operators/index.shared_postings mechanics + its Spark-version
-    coupling, see CLAUDE.md): the 3-column consumers (query vector,
-    its norm, the dot join) share ONE evaluation; the norm aggregation
-    prunes to 2 columns and is the second — column pruning reaches
-    below the exchange, so distinct column sets cannot share (the
-    pruning half of the CLAUDE.md trap). Two evaluations is the
-    ephemeral minimum without materializing: dots and norms aggregate
-    over different column sets by nature.
+    Pass ``weights`` (a persisted (doc_id, term, w_e3) table from
+    :func:`tfidf_weights`) for the production path — the scan then
+    gets pushdown; without it the tf-idf derivation runs in-plan.
 
     Returns (doc_id, cosine, rank), rank 1..k by (cosine desc, doc_id).
     """
-    if weights is not None:
-        w = weights
-    else:
-        barrier = F.element_at(F.shuffle(F.array(F.lit(True))), 1)
-        w = (
-            tfidf_weights(docs, id_col, text_col)
-            .repartition(n_parts, "doc_id")
-            .where(barrier)
-        )
+    w = weights if weights is not None else tfidf_weights(docs, id_col, text_col)
     qv = w.where(F.col("doc_id") == doc_id).select(
         "term", F.col("w_e3").alias("qw_e3")
     )
-    # query norm from the (tiny) query vector — NOT from the all-docs
-    # norms aggregate: this keeps it on the 3-column shared subtree
     qnorm = qv.agg(
         F.sum(F.col("qw_e3") * F.col("qw_e3")).cast("long").alias("qnorm2")
     )
-    norms = w.groupBy("doc_id").agg(
-        F.sum(F.col("w_e3") * F.col("w_e3")).alias("norm2")
-    )
-    dots = (
+    per_doc = (
         w.where(F.col("doc_id") != doc_id)
-        .join(F.broadcast(qv), "term")
+        .join(F.broadcast(qv), "term", "left")
         .groupBy("doc_id")
-        .agg(F.sum(F.col("w_e3") * F.col("qw_e3")).alias("dot"))
+        .agg(
+            F.sum(F.col("w_e3") * F.col("w_e3")).alias("norm2"),
+            F.sum(F.col("w_e3") * F.col("qw_e3")).alias("dot"),
+            F.count("qw_e3").alias("n_shared"),
+        )
     )
     scored = (
-        dots.join(norms, "doc_id")
+        per_doc.where(F.col("n_shared") > 0)
         .crossJoin(F.broadcast(qnorm))
         .where((F.col("norm2") > 0) & (F.col("qnorm2") > 0))
         .select(

@@ -1214,11 +1214,12 @@ class CrawlDriver:
             return self.store.commit(filter_table_name(cfg), blocks2, meta=meta)
 
         def _commit_metrics() -> int:
-            # wall_sec in the metrics ROW is captured at digest time —
-            # the round's compute wall; the commit tail it can no longer
-            # include is visible in the caller's RoundStats.wall_sec.
-            # Nothing downstream consumes the column (telemetry only).
-            wall = time.time() - t0
+            # wall_sec in the metrics ROW is digest_wall, taken on the
+            # round's own thread right after _digest() — the round's
+            # compute wall, whatever this task's wait in the pool; the
+            # commit tail it cannot include is visible in the caller's
+            # RoundStats.wall_sec. Nothing downstream consumes the
+            # column (telemetry only).
             metrics_rows = [
                 (
                     round_no,
@@ -1227,10 +1228,10 @@ class CrawlDriver:
                     int(s["candidates"]),
                     int(s["admitted"]),
                     int(s["new_urls"]),
-                    float(wall),
+                    digest_wall,
                 )
                 for s in stats.per_shard
-            ] or [(round_no, -1, 0, 0, 0, 0, float(wall))]
+            ] or [(round_no, -1, 0, 0, 0, 0, digest_wall)]
             metrics_df = spark.createDataFrame(metrics_rows, METRICS_SCHEMA)
             v = self.store.commit(
                 "metrics",
@@ -1259,6 +1260,7 @@ class CrawlDriver:
                 "hosts": _pool.submit(_commit_hosts),
             }
             _digest()
+            digest_wall = time.time() - t0
             _fb = {
                 "frontier": _pool.submit(_commit_frontier),
                 "seen": _pool.submit(_commit_seen),

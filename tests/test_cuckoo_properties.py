@@ -1,13 +1,15 @@
-"""Property tests for the cuckoo filter's vectorized numpy core
-(operators/cuckoo.py) — no Spark session needed.
+"""Property tests for the seen filters' vectorized numpy cores
+(operators/cuckoo.py, operators/seen.py) — no Spark session needed.
 
 Invariants fuzzed over random key multisets and geometries:
 
 * conservation — slots occupancy + stash size == number of inserted
   keys (the two-round placement drops nothing and duplicates nothing);
 * no false negatives — every inserted (bucket, fp) pair is findable in
-  bucket-1, bucket-2 or the stash (the pure-python probe twin below
-  mirrors cuckoo_prefilter's UDF body);
+  bucket-1, bucket-2 or the stash, both by the pure-python probe twin
+  below and by the production membership kernel (cuckoo_member) the
+  probe drivers run; likewise every key set into a bloom bitmap is a
+  member under bloom_member;
 * front-compaction — every bucket holds its occupied slots before its
   empty slots (the _place append contract);
 * delete-one — deleting k occurrences of an inserted key removes
@@ -22,6 +24,7 @@ from hypothesis import given, settings, strategies as st
 
 from searchengine_spark.config import CrawlConfig
 from searchengine_spark.operators import cuckoo as CK
+from searchengine_spark.operators import seen as SN
 
 GEOMS = [
     dataclasses.replace(
@@ -66,10 +69,27 @@ def test_insert_conserves_and_probes_positive(pairs):
         st_list = stash.tolist()
         for b, f in zip(bucket, fp):
             assert _probe_py(slots, st_list, int(b), int(f), mask)
+        keys = np.column_stack([fp, bucket, CK._alt(bucket, fp, mask)])
+        assert CK.cuckoo_member((slots, stash), keys).all()
         # front-compaction: no occupied slot after an empty one
         occ = slots != 0
         assert (occ[:, 1:] <= occ[:, :-1]).all()
         assert np.all(stash[:-1] <= stash[1:])  # stash stays sorted
+
+
+@given(
+    st.lists(st.binary(min_size=16, max_size=16).map(bytes.hex), max_size=200),
+    st.sampled_from([(8, 1), (64, 4), (1 << 12, 4), (1 << 16, 5)]),
+)
+@settings(max_examples=200, deadline=None)
+def test_bloom_member_has_no_false_negatives(md5s, geometry):
+    nbits, k = geometry
+    cfg = dataclasses.replace(CrawlConfig(), bloom_bits_per_shard=nbits, bloom_hashes=k)
+    bits = np.zeros(nbits // 8, dtype=np.uint8)
+    pos = np.array([SN._bit_positions(m, cfg) for m in md5s], dtype=np.int64)
+    for p in pos.ravel():
+        bits[p >> 3] |= 1 << (p & 7)
+    assert SN.bloom_member(bits, pos.reshape(-1, k)).all()
 
 
 @given(keys, st.data())

@@ -1012,9 +1012,8 @@ def test_semdedup_clones_share_cluster_and_match_lsh(spark):
 def test_search_weighted_batch_matches_single(spark):
     """Every arm of a batched search returns exactly the single-query
     search_weighted rows (plus query_id) — term sharing and the
-    shared-pass barrier must not change any score, host dedup, or
-    AND semantics — and the fold-proof barrier survives optimization
-    (same Spark-version coupling as shared_postings, see CLAUDE.md)."""
+    single-lineage pivot must not change any score, host dedup, or
+    AND semantics — and the final plan keeps that single lineage."""
     p = spark.createDataFrame(
         [
             ("alpha", "d1", 10, 0.5), ("beta", "d1", 12, 0.3),

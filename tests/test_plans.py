@@ -228,81 +228,15 @@ def test_term_lookup_pushdown_on_sorted_postings(spark, tmp_path):
     assert "PushedFilters" in plan and "EqualTo(term,sort)" in plan, plan[:1500]
 
 
-def test_shared_postings_barrier_survives_optimizer(spark):
-    """shared_postings' fold-proof barrier must survive optimization
-    (a rand()-based one is silently folded by Spark 4): the final plan
-    keeps the shuffle() predicate above ONE term-keyed exchange, and
-    row content is unchanged.
-
-    SPARK-VERSION COUPLING (see CLAUDE.md known traps): exchange reuse
-    depends on (a) `shuffle()` staying nondeterministic-to-Catalyst so
-    per-branch pushdown can't specialize the subtree below the barrier,
-    and (b) AQE reusing canonically identical exchanges. Both held up
-    to Spark 4.1; a Spark upgrade can silently break either."""
-    from searchengine_spark.operators import index as IX
-
-    p = spark.createDataFrame(
-        [("alpha", "d1", 1, 0.5), ("beta", "d2", 2, 0.4)],
-        "term string, doc_id string, pos int, rank double",
-    )
-    shared = IX.shared_postings(p, n_parts=4)
-    # both consumer branches must read the SAME columns: column pruning
-    # reaches below the exchange, so branches with different column
-    # sets get different canonical subtrees and NO reuse (CLAUDE.md
-    # trap) — the real search consumers all read all four dict columns
-    a = shared.groupBy("term").agg(
-        F.count("doc_id").alias("count"), F.sum("rank").alias("r"),
-        F.min("pos").alias("mp"),
-    )
-    b = shared.groupBy("doc_id").agg(
-        F.count("term").alias("c2"), F.sum("rank").alias("r2"),
-        F.min("pos").alias("mp2"),
-    )
-    out = a.join(b, a["count"] == b["c2"])
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "shuffle(" in plan, (
-        "shared_postings' element_at(shuffle([true]),1) barrier was "
-        "optimized away — this Spark version folds or strips the "
-        "nondeterministic shuffle() predicate, so every consumer branch "
-        "re-evaluates the dict build (search_smallterm regresses ~3x). "
-        "Find a new fold-proof barrier (operators/index.py "
-        "shared_postings) before trusting any multi-consumer dict plan."
-    )
-    # AQE prints a REUSED query stage by repeating the subtree with the
-    # SAME plan_id: all term-exchange prints in the final plan must be
-    # the one exchange object (distinct plan_ids = branches each built
-    # their own dict)
-    import re
-
-    final = plan.split("== Initial Plan ==")[0]
-    ids = set(
-        re.findall(
-            r"Exchange hashpartitioning\(term#\d+, \d+\), REPARTITION_BY_NUM,"
-            r" \[plan_id=(\d+)\]",
-            final,
-        )
-    )
-    assert len(ids) == 1, (
-        "the term-keyed exchange under shared_postings is no longer "
-        "REUSED across consumer branches (AQE exchange-reuse behavior "
-        f"changed — {len(ids)} distinct exchange plan_ids {ids}): each "
-        "branch now pays its own dict build. Plan:\n" + final[:2000]
-    )
-    rows = sorted((r["term"], r["doc_id"]) for r in shared.collect())
-    assert rows == [("alpha", "d1"), ("beta", "d2")]
-
-
-def test_seen_filter_cogroup_matches_broadcast(spark, monkeypatch):
-    """The r6 scale dispatch of the seen-filter prefilters: above the
-    configured-geometry byte bound, the driver collect+broadcast of the
-    block map is replaced by a shard-cogrouped probe (VERDICT r5 "What's
-    wrong" #1 — the broadcast path would materialize ~12.5 GB of bitmap
-    on the driver at 10^10 URLs). Both arms must tag IDENTICAL rows,
-    and the exact dedup through the cogroup arm must equal the plain
-    anti-join, for bloom AND cuckoo, including a shard with no block."""
+def test_seen_filter_cogroup_matches_broadcast(spark):
+    """The two seen-filter probe drivers — the driver-collect broadcast
+    arm and the shard-cogrouped arm that replaces it above
+    FILTER_BROADCAST_MAX_BYTES of configured geometry (a 10^10-URL
+    seen set would put ~12.5 GB of bitmap on the driver) — must tag
+    IDENTICAL rows, and the exact dedup through either must equal the
+    plain anti-join, for bloom AND cuckoo, including a shard with no
+    block (missing block => suspect)."""
     from searchengine_spark.operators import seen as SN
-    from searchengine_spark.operators.cuckoo import dedup_seen_with_cuckoo
 
     n = 400
     cand = spark.range(n).select(
@@ -316,34 +250,53 @@ def test_seen_filter_cogroup_matches_broadcast(spark, monkeypatch):
         r["url_md5"]
         for r in cand.join(seen.select("url_md5"), "url_md5", "left_anti").collect()
     )
+    sh6 = {r["url_md5"] for r in cand.where(F.col("shard") == 6).collect()}
     for flt in ("bloom", "cuckoo"):
         cfg = CrawlConfig(n_shards=7, seen_filter=flt)
+        structure = SN._filter_impl(cfg)
         blocks = SN.build_filter_blocks(seen.where(F.col("shard") != 6), cfg)
-        fn = dedup_seen_with_bloom if flt == "bloom" else dedup_seen_with_cuckoo
-        monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", str(1 << 40))
-        via_bc = sorted(r["url_md5"] for r in fn(spark, cand, seen, blocks, cfg).collect())
-        monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", "0")
-        via_cg = sorted(r["url_md5"] for r in fn(spark, cand, seen, blocks, cfg).collect())
-        assert via_bc == via_cg == expected, flt
-        # and the cogroup arm's tagged sets match the broadcast arm's
-        if flt == "bloom":
-            tag_cg = SN.bloom_prefilter(spark, cand, blocks, cfg)
-        else:
-            from searchengine_spark.operators.cuckoo import cuckoo_prefilter
-
-            tag_cg = cuckoo_prefilter(spark, cand, blocks, cfg)
-        monkeypatch.setenv("SEEN_FILTER_BROADCAST_MAX", str(1 << 40))
-        if flt == "bloom":
-            tag_bc = SN.bloom_prefilter(spark, cand, blocks, cfg)
-        else:
-            tag_bc = cuckoo_prefilter(spark, cand, blocks, cfg)
-        got_cg = sorted((r["url_md5"], r["maybe_seen"]) for r in tag_cg.collect())
+        tag_bc = SN.probe_broadcast(spark, cand, blocks, cfg, structure)
+        tag_cg = SN.probe_cogrouped(cand, blocks, cfg, structure)
         got_bc = sorted((r["url_md5"], r["maybe_seen"]) for r in tag_bc.collect())
+        got_cg = sorted((r["url_md5"], r["maybe_seen"]) for r in tag_cg.collect())
         assert got_cg == got_bc, flt
+        for tagged in (tag_bc, tag_cg):
+            via = sorted(r["url_md5"] for r in SN.exact_new(tagged, seen).collect())
+            assert via == expected, flt
         # no block => every shard-6 candidate is a suspect in both arms
-        suspects = {m for m, s in got_cg if s}
-        sh6 = {r["url_md5"] for r in cand.where(F.col("shard") == 6).collect()}
-        assert sh6 <= suspects, flt
+        assert sh6 <= {m for m, s in got_cg if s}, flt
+
+
+def test_seen_filter_arm_follows_geometry(spark):
+    """The prefilter arm is chosen from the CONFIGURED block geometry
+    alone: the shard-cogrouped probe (FlatMapCoGroupsInPandas) appears
+    only above FILTER_BROADCAST_MAX_BYTES (64 MB). Plans are built, not
+    run."""
+    import dataclasses
+
+    from searchengine_spark.operators import seen as SN
+
+    cand = spark.createDataFrame([], "url_md5 string, shard int")
+    cap = SN.FILTER_BROADCAST_MAX_BYTES
+    for cfg, block_schema in (
+        # 8 x 8 MB bitmaps: exactly the bound
+        (CrawlConfig(n_shards=8, bloom_bits_per_shard=1 << 26), "bitmap binary"),
+        # 511 x ~128 KiB of slots: just below the bound
+        (
+            CrawlConfig(
+                n_shards=511, seen_filter="cuckoo", cuckoo_buckets_per_shard=1 << 14
+            ),
+            "slots binary, stash binary",
+        ),
+    ):
+        structure = SN._filter_impl(cfg)
+        big = dataclasses.replace(cfg, n_shards=cfg.n_shards + 1)
+        assert structure.blocks_bytes(cfg) <= cap < structure.blocks_bytes(big)
+        blocks = spark.createDataFrame([], "shard int, " + block_schema)
+        for c, cogrouped in ((cfg, False), (big, True)):
+            tagged = SN.dedup_seen_with_filter(spark, cand, cand, blocks, c)
+            plan = tagged._jdf.queryExecution().sparkPlan().toString()
+            assert ("FlatMapCoGroupsInPandas" in plan) == cogrouped, (c, plan)
 
 
 def test_catalog_plan_audit_invariants(spark):
